@@ -244,54 +244,6 @@ object Dedup {
     }
   }
 
-  /** Each doc's PPJoin prefix — the |X| − ⌈t·|X|⌉ + 1 rarest shingles
-    * under the canonical (document frequency asc, hash asc) order —
-    * as (_id, _grp, _sz, _s) rows, with TWO physical regimes:
-    *
-    * - SMALL SHINGLE UNIVERSE (the char-n-gram case: n-grams over a
-    *   finite alphabet are a bounded set no matter the corpus size —
-    *   sf0.1's 712k 3-gram postings collapse to 1,885 distinct
-    *   shingles): the df table is collected ONCE via a bounded probe
-    *   and each doc selects its prefix in a single narrow map-side
-    *   pass — no posting⋈df join, no per-doc window sort, and the
-    *   downstream index explode emits ONLY prefix rows (~30% of
-    *   postings at t=0.7). The broadcast-join analogue, gated exactly
-    *   like `connectedComponents`' union-find fast path: driver memory
-    *   is bounded by `spark.graft.jaccard.localDfThreshold` distinct
-    *   (group, shingle) entries (default 1M ≈ tens of MB; 0 disables).
-    * - UNBOUNDED UNIVERSE (word tokens: vocabulary grows with the
-    *   corpus — typos, ids, URLs): the distributed shape — posting⋈df
-    *   equi-join, per-doc row_number window, prefix filter. The
-    *   deciding probe costs one aggregate job, which this path was
-    *   about to run anyway as the join's build side.
-    *
-    * Both regimes order by (df asc, hash asc) with the same 1e-9
-    * ceil slack (float rounding may only LENGTHEN a prefix, never
-    * shorten it), so they produce IDENTICAL prefixes — parity-asserted
-    * in ApiParitySpec. */
-  /** The bounded decide-and-deliver probe for a local df map (the
-    * CC-gate shape): fewer rows than the cap ⇒ the universe fits and
-    * the rows ARE the df map; hitting the cap ⇒ caller falls through
-    * to the distributed join path. */
-  private def collectDfIfSmall(dfreq: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val maxLocal = dfreq.sparkSession.conf
-      .get("spark.graft.jaccard.localDfThreshold", "1000000").toLong
-    if (maxLocal <= 0) None
-    else {
-      val cap = (math.min(maxLocal, Int.MaxValue - 2L) + 1L).toInt
-      val head = dfreq.limit(cap).collect()
-      if (head.length < cap) Some(head) else None
-    }
-  }
-
-  /** Map-side prefix selection against a collected (grp, shingle)→df
-    * table: emits (_id, _grp, _sz, _s, _df) prefix rows from `sized` in
-    * one narrow pass — no posting⋈df join, no per-doc window. `_df` is
-    * the shingle's document frequency under the same map (the chunked
-    * candidate join derives its chunk count from it); `defaultDf` is
-    * the df assumed for shingles ABSENT from the map (0 for probe docs
-    * scored against an index-side df table, matching the window path's
-    * left-join + coalesce(_df, 0)). */
   /** (grp -> shingle -> df) lookup from collected dfreq rows — shared
     * by the prefix construction and (containment) the container-side
     * chunk assignment, so ONE collected aggregate serves both sides
@@ -306,6 +258,14 @@ object Dedup {
     }
   }
 
+  /** Map-side prefix selection against a collected (grp, shingle)→df
+    * table: emits (_id, _grp, _sz, _s, _df) prefix rows from `sized` in
+    * one narrow pass — no posting⋈df join, no per-doc window. `_df` is
+    * the shingle's document frequency under the same map (the chunked
+    * candidate join derives its chunk count from it); `defaultDf` is
+    * the df assumed for shingles ABSENT from the map (0 for probe docs
+    * scored against an index-side df table, matching the window path's
+    * left-join + coalesce(_df, 0)). */
   private def localPrefixRows(sized: DataFrame,
       rows: Array[org.apache.spark.sql.Row], threshold: Double,
       defaultDf: Long, withChunkCols: Boolean = false): DataFrame = {
@@ -346,36 +306,60 @@ object Dedup {
     }
   }
 
+  /** Each doc's PPJoin prefix — the |X| − ⌈t·|X|⌉ + 1 rarest shingles
+    * under the canonical (document frequency asc, hash asc) order —
+    * as (_id, _grp, _sz, _s) rows, with TWO physical regimes:
+    *
+    * - SMALL SHINGLE UNIVERSE (the char-n-gram case: n-grams over a
+    *   finite alphabet are a bounded set no matter the corpus size —
+    *   sf0.1's 712k 3-gram postings collapse to 1,885 distinct
+    *   shingles): the df table is collected ONCE via a bounded probe
+    *   and each doc selects its prefix in a single narrow map-side
+    *   pass — no posting⋈df join, no per-doc window sort, and the
+    *   downstream index explode emits ONLY prefix rows (~30% of
+    *   postings at t=0.7). The broadcast-join analogue, decided by the
+    *   one [[Local]] probe: driver memory is bounded by
+    *   `spark.graft.localRowBudget` distinct (group, shingle) entries
+    *   (default 1M ≈ tens of MB; 0 disables).
+    * - UNBOUNDED UNIVERSE (word tokens: vocabulary grows with the
+    *   corpus — typos, ids, URLs): the distributed shape — posting⋈df
+    *   equi-join, per-doc row_number window, prefix filter. The
+    *   deciding probe costs one aggregate job, which this path was
+    *   about to run anyway as the join's build side.
+    *
+    * Both regimes order by (df asc, hash asc) with the same 1e-9
+    * ceil slack (float rounding may only LENGTHEN a prefix, never
+    * shorten it), so they produce IDENTICAL prefixes — parity-asserted
+    * in ApiParitySpec. */
   private def prefixTable(sized: DataFrame, threshold: Double,
       pin: DataFrame => DataFrame, withChunkCols: Boolean = false): DataFrame = {
     val posts = sized.select(col("_id"), col("_grp"), col("_sz"), explode(col("_h")).as("_s"))
     val dfreq = posts.groupBy("_grp", "_s").agg(count(lit(1)).as("_df"))
-    collectDfIfSmall(dfreq) match {
-      case Some(rows) =>
-        // every shingle is in its own df table, so defaultDf is moot
-        localPrefixRows(sized, rows, threshold, defaultDf = 1L, withChunkCols)
-      case None =>
-        // prefix length |X| − ⌈t·|X|⌉ + 1, with a 1e-9 slack so float
-        // rounding can only LENGTHEN a prefix (safe) never shorten it
-        val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
-        // the prefix table feeds both sides of the candidate self-join,
-        // but its exchange is shared via ReusedExchange within the
-        // action and the post-shuffle window recompute is cheap codegen
-        // — an explicit checkpoint here measured SLOWER on large
-        // shingle tables (ngram)
-        val rows = posts.join(pin(dfreq), Seq("_grp", "_s"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
-        if (!withChunkCols) rows.select("_id", "_grp", "_sz", "_s")
-        else
-          // `_psh` — the doc's whole prefix sorted ascending by hash,
-          // for the chunked join's min-common-shingle test — rides a
-          // second window over the SAME partition key as the
-          // row_number, so it reuses that exchange and adds no shuffle
-          rows.withColumn("_psh", sort_array(collect_list(col("_s"))
-              .over(Window.partitionBy("_id"))))
-            .select("_id", "_grp", "_sz", "_psh", "_s", "_df")
-    }
+    Local.run(Local.probe(dfreq)) { rows =>
+      // every shingle is in its own df table, so defaultDf is moot
+      localPrefixRows(sized, rows, threshold, defaultDf = 1L, withChunkCols)
+    } {
+      // prefix length |X| − ⌈t·|X|⌉ + 1, with a 1e-9 slack so float
+      // rounding can only LENGTHEN a prefix (safe) never shorten it
+      val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
+      // the prefix table feeds both sides of the candidate self-join,
+      // but its exchange is shared via ReusedExchange within the
+      // action and the post-shuffle window recompute is cheap codegen
+      // — an explicit checkpoint here measured SLOWER on large
+      // shingle tables (ngram)
+      val rows = posts.join(pin(dfreq), Seq("_grp", "_s"))
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
+      if (!withChunkCols) rows.select("_id", "_grp", "_sz", "_s")
+      else
+        // `_psh` — the doc's whole prefix sorted ascending by hash,
+        // for the chunked join's min-common-shingle test — rides a
+        // second window over the SAME partition key as the
+        // row_number, so it reuses that exchange and adds no shuffle
+        rows.withColumn("_psh", sort_array(collect_list(col("_s"))
+            .over(Window.partitionBy("_id"))))
+          .select("_id", "_grp", "_sz", "_psh", "_s", "_df")
+    }._1
   }
 
   /** Scale-probe hook: the CANDIDATE pairs the PPJoin prefix filter
@@ -522,39 +506,38 @@ object Dedup {
       // first cut re-aggregated the postings and paid a postings-wide
       // (grp, shingle) equi-join just to teach each container posting
       // its bucket's chunk count). In the local-df regime (bounded by
-      // spark.graft.jaccard.localDfThreshold) the collected map is
+      // spark.graft.localRowBudget) the collected map is
       // broadcast once and BOTH the prefix construction and the
       // container chunk assignment are pure map-side projections; the
       // distributed fallback pins the aggregate once and equi-joins it
       // into both sides.
       val dfreq = posts.groupBy("_grp", "_s").agg(count(lit(1)).as("_df"))
-      val (pref, cont) = collectDfIfSmall(dfreq) match {
-        case Some(rows) =>
-          val bc = sized.sparkSession.sparkContext.broadcast(dfMapByGrp(rows))
-          val dfbUdf = udf((grp: String, sh: Long) =>
-            bc.value.getOrElse(if (grp == null) "\u0000" else grp,
-              scala.collection.mutable.LongMap.empty[Long]).getOrElse(sh, 1L))
-          // the BARE prefix shape + a map-side df lookup: the
-          // withChunkCols=true shape would also carry `_psh`, the
-          // jaccard min-common input, which containment never reads —
-          // and its sort_array sibling of the explode re-evaluates per
-          // EXPLODED row (the 7.2 generator-sibling trap)
-          (localPrefixRows(sized, rows, threshold, defaultDf = 1L)
-              .withColumn("_df", dfbUdf(col("_grp").cast("string"), col("_s"))),
-            posts.withColumn("_dfb",
-              dfbUdf(col("_grp").cast("string"), col("_s"))))
-        case None =>
-          val pinned = Checkpoints.pin(dfreq)
-          val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
-          val prefPosts = sized.select(col("_id"), col("_grp"), col("_sz"),
-            explode(col("_h")).as("_s"))
-          val prefD = prefPosts.join(pin(pinned), Seq("_grp", "_s"))
-            .withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
-            .select(col("_id"), col("_grp"), col("_sz"), col("_s"), col("_df"))
-          (prefD, posts.join(pin(pinned.withColumnRenamed("_df", "_dfb")),
-            Seq("_grp", "_s")))
-      }
+      val (pref, cont) = Local.run(Local.probe(dfreq)) { rows =>
+        val bc = sized.sparkSession.sparkContext.broadcast(dfMapByGrp(rows))
+        val dfbUdf = udf((grp: String, sh: Long) =>
+          bc.value.getOrElse(if (grp == null) "\u0000" else grp,
+            scala.collection.mutable.LongMap.empty[Long]).getOrElse(sh, 1L))
+        // the BARE prefix shape + a map-side df lookup: the
+        // withChunkCols=true shape would also carry `_psh`, the
+        // jaccard min-common input, which containment never reads —
+        // and its sort_array sibling of the explode re-evaluates per
+        // EXPLODED row (the 7.2 generator-sibling trap)
+        (localPrefixRows(sized, rows, threshold, defaultDf = 1L)
+            .withColumn("_df", dfbUdf(col("_grp").cast("string"), col("_s"))),
+          posts.withColumn("_dfb",
+            dfbUdf(col("_grp").cast("string"), col("_s"))))
+      } {
+        val pinned = Checkpoints.pin(dfreq)
+        val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
+        val prefPosts = sized.select(col("_id"), col("_grp"), col("_sz"),
+          explode(col("_h")).as("_s"))
+        val prefD = prefPosts.join(pin(pinned), Seq("_grp", "_s"))
+          .withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
+          .select(col("_id"), col("_grp"), col("_sz"), col("_s"), col("_df"))
+        (prefD, posts.join(pin(pinned.withColumnRenamed("_df", "_dfb")),
+          Seq("_grp", "_s")))
+      }._1
       // df = 1 rows can never cross-pair (the shingle occurs in one
       // posting only) — drop them BEFORE anything is replicated or
       // shuffled; on long-tail token corpora that is most of the
@@ -640,23 +623,22 @@ object Dedup {
     // same two prefix regimes as `prefixTable`, under the INDEX-side
     // canonical order: probe shingles absent from the corpus have df 0
     // and sort first (the window path's left join + coalesce(_df, 0))
-    val (ip, pp) = collectDfIfSmall(dfreq) match {
-      case Some(rows) =>
-        (localPrefixRows(idx, rows, threshold, defaultDf = 1L),
-          localPrefixRows(prb, rows, threshold, defaultDf = 0L))
-      case None =>
-        def prefix(posts: DataFrame): DataFrame = {
-          val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
-          posts.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
-            .select("_id", "_grp", "_sz", "_s")
-        }
-        (prefix(idxPosts.join(pin(dfreq), Seq("_grp", "_s"))),
-          prefix(prb
-            .select(col("_id"), col("_grp"), col("_sz"), explode(col("_h")).as("_s"))
-            .join(pin(dfreq), Seq("_grp", "_s"), "left")
-            .withColumn("_df", coalesce(col("_df"), lit(0L)))))
-    }
+    val (ip, pp) = Local.run(Local.probe(dfreq)) { rows =>
+      (localPrefixRows(idx, rows, threshold, defaultDf = 1L),
+        localPrefixRows(prb, rows, threshold, defaultDf = 0L))
+    } {
+      def prefix(posts: DataFrame): DataFrame = {
+        val w = Window.partitionBy("_id").orderBy(col("_df").asc, col("_s").asc)
+        posts.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") <= col("_sz") - ceil(col("_sz") * threshold - 1e-9) + 1)
+          .select("_id", "_grp", "_sz", "_s")
+      }
+      (prefix(idxPosts.join(pin(dfreq), Seq("_grp", "_s"))),
+        prefix(prb
+          .select(col("_id"), col("_grp"), col("_sz"), explode(col("_h")).as("_s"))
+          .join(pin(dfreq), Seq("_grp", "_s"), "left")
+          .withColumn("_df", coalesce(col("_df"), lit(0L)))))
+    }._1
     val cand = pp.select(col("_id").as("probe_id"), col("_grp"),
         col("_sz").as("_szp"), col("_s"))
       .join(pin(ip.select(col("_id").as("index_id"), col("_grp").as("_grp2"),
@@ -920,12 +902,12 @@ object Dedup {
     * for exploratory runs). With pointer halving the default budget
     * covers diameters beyond 2^20 — any practical graph.
     *
-    * Edge lists at or below `spark.graft.cc.localEdgeThreshold`
-    * (default 2M edges) skip the loop entirely for a driver union-find
-    * over the collected (id1, id2) pairs — identical labels, one job
-    * instead of one per round. This is the broadcast-join analogue:
-    * pick the local plan when the input provably fits, keep the
-    * shuffle plan for when it doesn't. */
+    * Edge lists within `spark.graft.localRowBudget` ([[Local]]) skip
+    * the loop entirely for a driver union-find over the collected
+    * (id1, id2) pairs — identical labels, one job instead of one per
+    * round. This is the broadcast-join analogue: pick the local plan
+    * when the input provably fits, keep the shuffle plan for when it
+    * doesn't. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       strict: Boolean = true): DataFrame = {
     val spark = pairs.sparkSession
@@ -937,124 +919,105 @@ object Dedup {
     // a 10 s → 37 s swing on dedup_clusters depending on stage timing
     val edges = Checkpoints.pin(
       pairs.select(col("id1").as("a"), col("id2").as("b")))
-    // SMALL-GRAPH FAST PATH — the broadcast-join analogue for CC: a
-    // near-dup pair graph is usually orders of magnitude smaller than
-    // the corpus that produced it, and below this edge budget a driver
-    // union-find beats the iterative loop's per-round job latency by an
-    // order of magnitude (and is immune to ambient-load stragglers).
-    // ONE bounded action decides AND delivers: collect up to
-    // threshold+1 rows — fewer than the cap means the graph fits and
-    // the collected rows ARE the union-find input; hitting the cap
-    // cost only a bounded probe over already-checkpointed blocks (no
-    // pair-pipeline re-run) and we take the distributed loop. Driver
-    // memory is bounded by the conf: ~2M Row(id, id) ≈ tens-of-MB at
-    // the default — raise it only with driver heap to match. Set
-    // spark.graft.cc.localEdgeThreshold=0 to force the distributed
-    // loop (tests do, and a 100 TB graph exceeds any sane threshold).
-    val localMax =
-      spark.conf.get("spark.graft.cc.localEdgeThreshold", "2000000").toLong
-    if (localMax > 0) {
-      val cap = (math.min(localMax, Int.MaxValue - 2L) + 1L).toInt
-      val head = edges.limit(cap).collect()
-      if (head.length < cap) {
-        try return localUnionFind(head, edges.schema("a").dataType, spark, n)
-        finally Checkpoints.free(edges)
+    // the probe reads the already-checkpointed blocks (no pair-pipeline
+    // re-run); the driver union-find is immune to ambient-load stragglers
+    Local.run(Local.probe(edges), edges)(
+        localUnionFind(_, edges.schema("a").dataType, spark, n)) {
+      // hash-partition the (static) edge list by the probe key ONCE; each
+      // round's join then only shuffles the much smaller label table
+      val sym = Checkpoints.pin(edges.union(edges.select(col("b").as("a"), col("a").as("b")))
+        .repartition(n, col("b")))
+      // the eager checkpoint IS the round's one action; Σlabel rides it
+      // as an observed metric instead of costing a second job. The sum is
+      // taken as decimal(38,0), not long: labels are node ids, and a raw
+      // i64 sum over billions of large ids could wrap, silently breaking
+      // the strict-monotonicity argument the early-exit relies on.
+      def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+        val obs = org.apache.spark.sql.Observation()
+        val ck = Checkpoints.pin(
+          df.observe(obs, coalesce(sum(col("label").cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")).as("lsum")))
+        (ck, obs.get("lsum").asInstanceOf[java.math.BigDecimal])
       }
-    }
-    // hash-partition the (static) edge list by the probe key ONCE; each
-    // round's join then only shuffles the much smaller label table
-    val sym = Checkpoints.pin(edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(n, col("b")))
-    // the eager checkpoint IS the round's one action; Σlabel rides it
-    // as an observed metric instead of costing a second job. The sum is
-    // taken as decimal(38,0), not long: labels are node ids, and a raw
-    // i64 sum over billions of large ids could wrap, silently breaking
-    // the strict-monotonicity argument the early-exit relies on.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Checkpoints.pin(
-        df.observe(obs, coalesce(sum(col("label").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("lsum")))
-      (ck, obs.get("lsum").asInstanceOf[java.math.BigDecimal])
-    }
-    // free a superseded round's checkpoint blocks (and files, in the
-    // reliable posture) instead of leaving them to GC-driven cleanup —
-    // a long loop would otherwise pin every round's label table
-    def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-    // TEST HOOK — simulate executor loss / memory-pressure eviction:
-    // with spark.graft.cc.testEvictEachRound=true every round drops ALL
-    // persisted blocks after its checkpoint. In the reliable posture
-    // the loop still converges (data lives in checkpoint FILES, not
-    // blocks); in the local posture the next round's read of an evicted
-    // localCheckpoint block fails unrecoverably — exactly the 100 TB
-    // failure mode the conf exists to close. CheckpointPostureSpec
-    // asserts both sides of that contrast.
-    val evictEachRound =
-      spark.conf.get("spark.graft.cc.testEvictEachRound", "false").toBoolean
-    def maybeEvict(): Unit = if (evictEachRound)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    // round 1 needs no join: labels are the ids themselves, so the
-    // neighbor-min is a single aggregate over the edge list
-    // every checkpoint pinned by the loop is released on ALL exit
-    // paths: superseded rounds are freed as the loop runs, edges/sym in
-    // the finally, and the current labels table too on ANY abnormal
-    // exit — the strict non-convergence throw AND unexpected mid-loop
-    // failures (a failed checkpoint/Observation job) alike; only the
-    // successfully returned frame keeps its blocks
-    var labels: DataFrame = null
-    var returned = false
-    try {
-    var (l0, prevSum) = checkpointWithSum(sym.groupBy(col("b"))
-      .agg(least(min(col("a")), col("b")).as("label"))
-      .select(col("b").as("id"), col("label")))
-    labels = l0
-    maybeEvict()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = sym.join(labels.withColumnRenamed("id", "b"), "b")
-        .select(col("a").as("id"), col("label"))
-      val merged = labels.union(prop)
-        .groupBy("id").agg(min(col("label")).as("label"))
-      // pointer halving: look the fresh label up in the PREVIOUS
-      // round's (already checkpointed) table — L_prev(x) <= x keeps the
-      // decrease monotone, and chains contract geometrically. Label
-      // values are node ids, so the lookup always hits; the left join +
-      // coalesce is belt-and-braces for the first round's self-labels.
-      // ADAPTIVE: dense near-dup graphs (diameter ~2-4) converge on
-      // plain propagation before the shortcut could help, so its two
-      // extra exchanges only start after round 3 — by then the graph
-      // has demonstrated real diameter and the log-round contraction
-      // is what bounds the loop.
-      val short =
-        if (i < 3) merged
-        else merged
-          .join(labels.select(col("id").as("_lid"), col("label").as("_ll")),
-            col("label") === col("_lid"), "left")
-          .select(col("id"), coalesce(col("_ll"), col("label")).as("label"))
-      val (next, s) = checkpointWithSum(short)
-      freeCheckpoint(labels)
-      labels = next
+      // free a superseded round's checkpoint blocks (and files, in the
+      // reliable posture) instead of leaving them to GC-driven cleanup —
+      // a long loop would otherwise pin every round's label table
+      def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
+      // TEST HOOK — simulate executor loss / memory-pressure eviction:
+      // with spark.graft.cc.testEvictEachRound=true every round drops ALL
+      // persisted blocks after its checkpoint. In the reliable posture
+      // the loop still converges (data lives in checkpoint FILES, not
+      // blocks); in the local posture the next round's read of an evicted
+      // localCheckpoint block fails unrecoverably — exactly the 100 TB
+      // failure mode the conf exists to close. CheckpointPostureSpec
+      // asserts both sides of that contrast.
+      val evictEachRound =
+        spark.conf.get("spark.graft.cc.testEvictEachRound", "false").toBoolean
+      def maybeEvict(): Unit = if (evictEachRound)
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // round 1 needs no join: labels are the ids themselves, so the
+      // neighbor-min is a single aggregate over the edge list
+      // every checkpoint pinned by the loop is released on ALL exit
+      // paths: superseded rounds are freed as the loop runs, edges/sym in
+      // the finally, and the current labels table too on ANY abnormal
+      // exit — the strict non-convergence throw AND unexpected mid-loop
+      // failures (a failed checkpoint/Observation job) alike; only the
+      // successfully returned frame keeps its blocks
+      var labels: DataFrame = null
+      var returned = false
+      try {
+      var (l0, prevSum) = checkpointWithSum(sym.groupBy(col("b"))
+        .agg(least(min(col("a")), col("b")).as("label"))
+        .select(col("b").as("id"), col("label")))
+      labels = l0
       maybeEvict()
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-    }
-    if (!converged) {
-      val msg = s"connectedComponents did not converge in $maxIter rounds: " +
-        "a duplicate chain is longer than maxIter hops, so labels are not yet " +
-        "the reachable minimum. Raise maxIter, or for extreme-diameter graphs " +
-        "use large-star/small-star alternation (O(log n) rounds)."
-      if (strict) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(msg)
-    }
-    returned = true
-    labels
-    } finally {
-      freeCheckpoint(edges)
-      freeCheckpoint(sym)
-      if (!returned && labels != null) freeCheckpoint(labels)
-    }
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        val prop = sym.join(labels.withColumnRenamed("id", "b"), "b")
+          .select(col("a").as("id"), col("label"))
+        val merged = labels.union(prop)
+          .groupBy("id").agg(min(col("label")).as("label"))
+        // pointer halving: look the fresh label up in the PREVIOUS
+        // round's (already checkpointed) table — L_prev(x) <= x keeps the
+        // decrease monotone, and chains contract geometrically. Label
+        // values are node ids, so the lookup always hits; the left join +
+        // coalesce is belt-and-braces for the first round's self-labels.
+        // ADAPTIVE: dense near-dup graphs (diameter ~2-4) converge on
+        // plain propagation before the shortcut could help, so its two
+        // extra exchanges only start after round 3 — by then the graph
+        // has demonstrated real diameter and the log-round contraction
+        // is what bounds the loop.
+        val short =
+          if (i < 3) merged
+          else merged
+            .join(labels.select(col("id").as("_lid"), col("label").as("_ll")),
+              col("label") === col("_lid"), "left")
+            .select(col("id"), coalesce(col("_ll"), col("label")).as("label"))
+        val (next, s) = checkpointWithSum(short)
+        freeCheckpoint(labels)
+        labels = next
+        maybeEvict()
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        i += 1
+      }
+      if (!converged) {
+        val msg = s"connectedComponents did not converge in $maxIter rounds: " +
+          "a duplicate chain is longer than maxIter hops, so labels are not yet " +
+          "the reachable minimum. Raise maxIter, or for extreme-diameter graphs " +
+          "use large-star/small-star alternation (O(log n) rounds)."
+        if (strict) throw new IllegalStateException(msg)
+        else org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(msg)
+      }
+      returned = true
+      labels
+      } finally {
+        freeCheckpoint(edges)
+        freeCheckpoint(sym)
+        if (!returned && labels != null) freeCheckpoint(labels)
+      }
+    }._1
   }
 
   /** Character n-gram (shingle) Jaccard near-dup pairs — robust to

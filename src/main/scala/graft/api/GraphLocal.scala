@@ -2,45 +2,23 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** SMALL-GRAPH FAST PATHS for the [[GraphOps]] kernels — the
-  * decide-and-deliver pattern [[Dedup.connectedComponents]] established
-  * (r21, optimization round): an AGGREGATED analytics graph (the
-  * nation-level trade graph, a near-dup pair graph, a domain link
-  * rollup) is usually orders of magnitude smaller than the corpus that
-  * produced it, and below an edge budget a driver-side kernel beats the
-  * iterative DataFrame loop's per-round job latency (each round costs a
-  * join + aggregate + eager checkpoint — 3-6 jobs of pure scheduling
-  * overhead on a 25-node graph) by an order of magnitude.
-  *
-  * ONE bounded action decides AND delivers: collect up to threshold+1
-  * edge rows from the already-pinned edge frame — fewer than the cap
-  * means the graph fits and the collected rows ARE the kernel input;
-  * hitting the cap cost only a bounded probe over checkpointed blocks
-  * and the caller takes the distributed loop unchanged. Driver memory
-  * is bounded by the conf (~2M edge tuples ≈ tens of MB at the
-  * default); a 100 TB link graph exceeds any sane threshold and always
-  * takes the loop. Set `spark.graft.graph.localEdgeThreshold=0` to
-  * force the distributed path (the loop-posture tests do).
+/** The driver-side twins of the [[GraphOps]] kernels. Which one runs —
+  * twin or distributed loop — is decided in ONE place, [[Local]]: a
+  * bounded probe over the kernel's (usually pinned) edge frame collects
+  * at most `spark.graft.localRowBudget` rows, and the collected rows are
+  * the twin's input. An AGGREGATED analytics graph (the nation-level
+  * trade graph, a near-dup pair graph, a domain link rollup) usually
+  * fits, and there a driver kernel skips the loop's per-round job
+  * latency (each round costs a join + aggregate + eager checkpoint —
+  * 3-6 jobs of pure scheduling overhead on a 25-node graph).
   *
   * EVERY kernel here replicates its distributed twin's arithmetic
   * token for token — integer mass/degree/vote sums, the Canon 6-dp
   * grid-round before decimal folds, the same IEEE op order for each
-  * float readout — so the two paths are bit-identical (GraphSpec's
-  * parity tests assert it kernel by kernel).
+  * float readout — so the two paths are bit-identical
+  * (GraphLocalParitySpec asserts it kernel by kernel).
   */
 private[api] object GraphLocal {
-
-  def maxEdges(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.graph.localEdgeThreshold", "2000000").toLong
-
-  /** Bounded probe: Some(rows) iff `df` provably fits the budget. */
-  def collectBounded(df: DataFrame): Option[Array[Row]] = {
-    val max = maxEdges(df.sparkSession)
-    if (max <= 0) return None
-    val cap = (math.min(max, Int.MaxValue - 2L) + 1L).toInt
-    val head = df.limit(cap).collect()
-    if (head.length < cap) Some(head) else None
-  }
 
   /** Canon.rk on the driver: floor(x·10^k + 0.5)/10^k in pure IEEE
     * double ops — bit-identical to the Column form for the same input. */

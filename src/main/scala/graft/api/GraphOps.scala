@@ -56,39 +56,41 @@ object GraphOps {
     val e = Checkpoints.pin(edges
       .select(col(srcCol).cast("long").as("_src"), col(dstCol).cast("long").as("_dst"))
       .filter(col("_src") =!= col("_dst")).distinct())
-    // SMALL-GRAPH FAST PATH (see GraphLocal): one bounded probe over the
-    // pinned edge frame decides AND delivers; big graphs take the loop
-    val local = GraphLocal.collectBounded(e)
-    if (local.isDefined) {
-      try return GraphLocal.pagerank(edges.sparkSession, local.get,
-        iters, massScale, dampPct)
-      finally Checkpoints.free(e)
-    }
-    val nodes = Checkpoints.pin(
-      e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
-    val eDeg = Checkpoints.pin(
-      e.join(e.groupBy("_src").agg(count(lit(1)).as("_outdeg")), "_src"))
-    val n = nodes.count() // bounded driver scalar: one long
-    require(n > 0, "pagerank needs a non-empty edge set")
-    val teleport = (massScale * (100L - dampPct) / 100L) / n
-    def pinMass(m: DataFrame): DataFrame =
-      if (broadcastMass) broadcast(m) else m.hint("shuffle_hash")
-    var mass = nodes.withColumn("mass", lit(massScale / n))
-    var pinnedRounds = 0
-    for (_ <- 1 to iters) {
-      val in = eDeg.join(pinMass(mass), col("_src") === col("node"))
-        .select(col("_dst"), expr(s"((mass * $dampPct) div 100) div _outdeg").as("_send"))
-        .groupBy("_dst").agg(sum(col("_send")).as("_in"))
-      val next = Checkpoints.pin(nodes.join(in, col("node") === col("_dst"), "left")
-        .select(col("node"), (lit(teleport) + coalesce(col("_in"), lit(0L))).as("mass")))
-      // the new pin is already materialized, so the superseded round's
-      // blocks can go — a long loop would otherwise pin every round's
-      // rank vector (the connectedComponents loop frees the same way)
-      if (pinnedRounds > 0) Checkpoints.free(mass)
-      mass = next
-      pinnedRounds += 1
-    }
-    mass
+    Local.run(Local.probe(e), e)(
+        GraphLocal.pagerank(edges.sparkSession, _, iters, massScale, dampPct)) {
+      val nodes = Checkpoints.pin(
+        e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
+      val eDeg = Checkpoints.pin(
+        e.join(e.groupBy("_src").agg(count(lit(1)).as("_outdeg")), "_src"))
+      // the result is the last round's pinned leaf, which no longer
+      // references the loop-invariant pins — free them here (also on a
+      // throw) rather than strand them on the caller
+      try {
+        val n = nodes.count() // bounded driver scalar: one long
+        require(n > 0, "pagerank needs a non-empty edge set")
+        val teleport = (massScale * (100L - dampPct) / 100L) / n
+        def pinMass(m: DataFrame): DataFrame =
+          if (broadcastMass) broadcast(m) else m.hint("shuffle_hash")
+        var mass = nodes.withColumn("mass", lit(massScale / n))
+        var pinnedRounds = 0
+        for (_ <- 1 to iters) {
+          val in = eDeg.join(pinMass(mass), col("_src") === col("node"))
+            .select(col("_dst"), expr(s"((mass * $dampPct) div 100) div _outdeg").as("_send"))
+            .groupBy("_dst").agg(sum(col("_send")).as("_in"))
+          val next = Checkpoints.pin(nodes.join(in, col("node") === col("_dst"), "left")
+            .select(col("node"), (lit(teleport) + coalesce(col("_in"), lit(0L))).as("mass")))
+          // the new pin is already materialized, so the superseded round's
+          // blocks can go — a long loop would otherwise pin every round's
+          // rank vector (the connectedComponents loop frees the same way)
+          if (pinnedRounds > 0) Checkpoints.free(mass)
+          mass = next
+          pinnedRounds += 1
+        }
+        mass
+      } finally {
+        Checkpoints.free(e); Checkpoints.free(nodes); Checkpoints.free(eDeg)
+      }
+    }._1
   }
 
   /** Bounded-hop BFS distances from a source node set, by min-plus
@@ -115,43 +117,41 @@ object GraphOps {
     val e = Checkpoints.pin(edges
       .select(col(srcCol).cast("long").as("_src"), col(dstCol).cast("long").as("_dst"))
       .filter(col("_src") =!= col("_dst")).distinct())
-    // SMALL-GRAPH FAST PATH — both the edge set and the (deduped)
-    // source set must fit the budget; either probe failing falls
-    // through to the distributed loop unchanged
-    val localE = GraphLocal.collectBounded(e)
-    if (localE.isDefined) {
-      val localSrc = GraphLocal.collectBounded(
-        sources.select(col("node").cast("long").as("node")).distinct())
-      if (localSrc.isDefined) {
-        try return GraphLocal.bfs(edges.sparkSession, localE.get,
-          localSrc.get.map(_.getLong(0)).toSet, maxHops)
-        finally Checkpoints.free(e)
-      }
-    }
-    val nodes = Checkpoints.pin(
-      e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
-    // distinct: dist₀ = nodes LEFT-join src, so a node listed twice in
-    // `sources` would duplicate its dist row and every round/output row
-    // after it — the same one-row-per-node invariant fix
-    // weightedDistances carries (r20 ADVICE closed here)
-    val src = sources.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("_d0", lit(0L))
-    def pinD(m: DataFrame): DataFrame =
-      if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
-    var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
-      .select(col("node"), col("_d0").as("dist")))
-    for (_ <- 1 to maxHops) {
-      val nb = e.join(pinD(dist.filter(col("dist").isNotNull)),
-          col("_src") === col("node"))
-        .groupBy(col("_dst")).agg(min(col("dist") + lit(1L)).as("_nd"))
-      val next = Checkpoints.pin(nodes
-        .join(dist, Seq("node"))
-        .join(nb, col("node") === col("_dst"), "left")
-        .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
-      Checkpoints.free(dist) // superseded round — see pagerankMass
-      dist = next
-    }
-    dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+    // both the edge set and the (deduped) source set must fit
+    val local = for (eRows <- Local.probe(e); srcRows <- Local.probe(
+        sources.select(col("node").cast("long").as("node")).distinct()))
+      yield (eRows, srcRows.map(_.getLong(0)).toSet)
+    Local.run(local, e) { case (eRows, src) =>
+      GraphLocal.bfs(edges.sparkSession, eRows, src, maxHops) } {
+      val nodes = Checkpoints.pin(
+        e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
+      // the final dist is a pinned leaf — free the loop-invariant edge
+      // and node pins here (also on a throw), as pagerankMass does
+      try {
+        // distinct: dist₀ = nodes LEFT-join src, so a node listed twice in
+        // `sources` would duplicate its dist row and every round/output row
+        // after it — the same one-row-per-node invariant fix
+        // weightedDistances carries (r20 ADVICE closed here)
+        val src = sources.select(col("node").cast("long").as("node")).distinct()
+          .withColumn("_d0", lit(0L))
+        def pinD(m: DataFrame): DataFrame =
+          if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
+        var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
+          .select(col("node"), col("_d0").as("dist")))
+        for (_ <- 1 to maxHops) {
+          val nb = e.join(pinD(dist.filter(col("dist").isNotNull)),
+              col("_src") === col("node"))
+            .groupBy(col("_dst")).agg(min(col("dist") + lit(1L)).as("_nd"))
+          val next = Checkpoints.pin(nodes
+            .join(dist, Seq("node"))
+            .join(nb, col("node") === col("_dst"), "left")
+            .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
+          Checkpoints.free(dist) // superseded round — see pagerankMass
+          dist = next
+        }
+        dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+      } finally { Checkpoints.free(e); Checkpoints.free(nodes) }
+    }._1
   }
 
   /** Bounded WEIGHTED shortest-path distances (min-plus relaxation)
@@ -179,60 +179,55 @@ object GraphOps {
       broadcastDist: Boolean = true): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
-    // SMALL-GRAPH FAST PATH — probe the pinned symmetric fold (and the
-    // deduped source set); either probe failing takes the loop
-    val localSym = GraphLocal.collectBounded(sym)
-    if (localSym.isDefined) {
-      val localSrc = GraphLocal.collectBounded(
-        sources.select(col("node").cast("long").as("node")).distinct())
-      if (localSrc.isDefined) {
-        try return GraphLocal.weighted(edges.sparkSession, localSym.get,
-          localSrc.get.map(_.getLong(0)).toSet, rounds)
-        finally Checkpoints.free(sym)
-      }
-    }
-    val nodes = Checkpoints.pin(sym.select(col("u").as("node")).distinct())
-    try {
-      // distinct: dist₀ = nodes LEFT-join src, so a node listed twice
-      // in `sources` would duplicate its dist row and every
-      // round/output row after it — the one-row-per-node invariant the
-      // nodes-re-join elision below depends on. Source-set-sized.
-      val src = sources.select(col("node").cast("long").as("node")).distinct()
-        .withColumn("_d0", lit(0L))
-      def pinD(m: DataFrame): DataFrame =
-        if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
-      var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
-        .select(col("node"), col("_d0").as("dist")))
+    // both the symmetric fold and the (deduped) source set must fit
+    val local = for (symRows <- Local.probe(sym); srcRows <- Local.probe(
+        sources.select(col("node").cast("long").as("node")).distinct()))
+      yield (symRows, srcRows.map(_.getLong(0)).toSet)
+    Local.run(local, sym) { case (symRows, src) =>
+      GraphLocal.weighted(edges.sparkSession, symRows, src, rounds) } {
+      val nodes = Checkpoints.pin(sym.select(col("u").as("node")).distinct())
       try {
-        for (_ <- 1 to rounds) {
-          val nb = sym.join(pinD(dist.filter(col("dist").isNotNull)),
-              col("u") === col("node"))
-            .groupBy(col("v")).agg(min(col("dist") + col("w")).as("_nd"))
-          // dist is one row per node BY CONSTRUCTION (dist₀ = nodes
-          // left-join sources; every round preserves it), so joining
-          // back through `nodes` would be a 1:1 self-confirmation join
-          // — one redundant node-scale equi-join per round at the
-          // billion-node posture (review finding, r19; bfsDistances
-          // keeps its historical shape — same invariant, same rewrite
-          // available, but its committed plans/benches pin that form)
-          val next = Checkpoints.pin(dist
-            .join(nb, col("node") === col("v"), "left")
-            .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
-          Checkpoints.free(dist) // superseded round — see pagerankMass
-          dist = next
+        // distinct: dist₀ = nodes LEFT-join src, so a node listed twice
+        // in `sources` would duplicate its dist row and every
+        // round/output row after it — the one-row-per-node invariant the
+        // nodes-re-join elision below depends on. Source-set-sized.
+        val src = sources.select(col("node").cast("long").as("node")).distinct()
+          .withColumn("_d0", lit(0L))
+        def pinD(m: DataFrame): DataFrame =
+          if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
+        var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
+          .select(col("node"), col("_d0").as("dist")))
+        try {
+          for (_ <- 1 to rounds) {
+            val nb = sym.join(pinD(dist.filter(col("dist").isNotNull)),
+                col("u") === col("node"))
+              .groupBy(col("v")).agg(min(col("dist") + col("w")).as("_nd"))
+            // dist is one row per node BY CONSTRUCTION (dist₀ = nodes
+            // left-join sources; every round preserves it), so joining
+            // back through `nodes` would be a 1:1 self-confirmation join
+            // — one redundant node-scale equi-join per round at the
+            // billion-node posture (review finding, r19; bfsDistances
+            // keeps its historical shape — same invariant, same rewrite
+            // available, but its committed plans/benches pin that form)
+            val next = Checkpoints.pin(dist
+              .join(nb, col("node") === col("v"), "left")
+              .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
+            Checkpoints.free(dist) // superseded round — see pagerankMass
+            dist = next
+          }
+          dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+        } catch {
+          // a throw mid-loop must not strand the live round's pin (the
+          // labelPropagationOnSym r18-ADVICE convention)
+          case e: Throwable => Checkpoints.free(dist); throw e
         }
-        dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
-      } catch {
-        // a throw mid-loop must not strand the live round's pin (the
-        // labelPropagationOnSym r18-ADVICE convention)
-        case e: Throwable => Checkpoints.free(dist); throw e
+      } finally {
+        // the final dist is a pinned leaf — the loop-invariant fold and
+        // node frames are no longer referenced by the returned plan, so
+        // free them here rather than strand them on the caller
+        Checkpoints.free(sym); Checkpoints.free(nodes)
       }
-    } finally {
-      // the final dist is a pinned leaf — the loop-invariant fold and
-      // node frames are no longer referenced by the returned plan, so
-      // free them here rather than strand them on the caller
-      Checkpoints.free(sym); Checkpoints.free(nodes)
-    }
+    }._1
   }
 
   /** Per-node degree/strength profile of a weighted directed edge
@@ -247,32 +242,29 @@ object GraphOps {
     * pipeline that produced the edges. */
   def degreeStats(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String): DataFrame = {
-    // SMALL-GRAPH FAST PATH — the probe runs the (usually pre-pinned)
-    // edge derivation once; node ids surface as long on this path
-    // (every other kernel here already casts — output consumers key on
-    // node VALUE, and int/long equi-joins coerce)
-    val local = GraphLocal.collectBounded(edges.select(
-      col(srcCol).cast("long"), col(dstCol).cast("long"),
-      col(weightCol).cast("long")))
-    if (local.isDefined)
-      return GraphLocal.degreeStats(edges.sparkSession, local.get)
-    // node ids cast to long HERE TOO (r22): the output schema must not
-    // depend on which side of spark.graft.graph.localEdgeThreshold the
-    // graph lands — both postures emit long node ids (numeric ids are
-    // the contract; every kernel in this file already casts)
-    val e = edges.select(col(srcCol).cast("long").as("_src"),
-      col(dstCol).cast("long").as("_dst"),
-      col(weightCol).cast("long").as("_w"))
-    val out = e.groupBy(col("_src").as("node"))
-      .agg(count(lit(1)).as("out_deg"), sum(col("_w")).as("out_w"))
-    val in = e.groupBy(col("_dst").as("node"))
-      .agg(count(lit(1)).as("in_deg"), sum(col("_w")).as("in_w"))
-    out.join(in, Seq("node"), "full_outer")
-      .select(col("node"),
-        coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-        coalesce(col("in_deg"), lit(0L)).as("in_deg"),
-        coalesce(col("out_w"), lit(0L)).as("out_w"),
-        coalesce(col("in_w"), lit(0L)).as("in_w"))
+    // the probe runs the (usually pre-pinned) edge derivation once
+    Local.run(Local.probe(edges.select(
+        col(srcCol).cast("long"), col(dstCol).cast("long"),
+        col(weightCol).cast("long"))))(
+        GraphLocal.degreeStats(edges.sparkSession, _)) {
+      // node ids cast to long HERE TOO (r22): the output schema must not
+      // depend on which side of spark.graft.localRowBudget the
+      // graph lands — both postures emit long node ids (numeric ids are
+      // the contract; every kernel in this file already casts)
+      val e = edges.select(col(srcCol).cast("long").as("_src"),
+        col(dstCol).cast("long").as("_dst"),
+        col(weightCol).cast("long").as("_w"))
+      val out = e.groupBy(col("_src").as("node"))
+        .agg(count(lit(1)).as("out_deg"), sum(col("_w")).as("out_w"))
+      val in = e.groupBy(col("_dst").as("node"))
+        .agg(count(lit(1)).as("in_deg"), sum(col("_w")).as("in_w"))
+      out.join(in, Seq("node"), "full_outer")
+        .select(col("node"),
+          coalesce(col("out_deg"), lit(0L)).as("out_deg"),
+          coalesce(col("in_deg"), lit(0L)).as("in_deg"),
+          coalesce(col("out_w"), lit(0L)).as("out_w"),
+          coalesce(col("in_w"), lit(0L)).as("in_w"))
+    }._1
   }
 
   /** Link-prediction scores for every node pair of the UNDIRECTED
@@ -301,32 +293,28 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
-    // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.linkPredict(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
-    }
-    val nbr = und.select(col("lo").as("u"), col("hi").as("v"))
-      .union(und.select(col("hi").as("u"), col("lo").as("v")))
-    val deg = nbr.groupBy("u").agg(count(lit(1)).as("_deg"))
-    val term = Canon.rk(lit(1.0) / log(col("_degw").cast("double")), 6)
-      .cast(org.apache.spark.sql.types.DecimalType(28, 6))
-    val pairs = nbr.select(col("v").as("_w"), col("u").as("a"))
-      .join(nbr.select(col("v").as("_w"), col("u").as("b")), "_w")
-      .filter(col("a") < col("b"))
-      .join(deg.select(col("u").as("_w"), col("_deg").as("_degw")), "_w")
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum(term).cast("double").as("adamic_adar"))
-    pairs
-      .join(deg.select(col("u").as("a"), col("_deg").as("_da")), "a")
-      .join(deg.select(col("u").as("b"), col("_deg").as("_db")), "b")
-      .join(und.select(col("lo").as("a"), col("hi").as("b"), lit(1L).as("_adj")),
-        Seq("a", "b"), "left")
-      .select(col("a"), col("b"), col("cn"),
-        (col("cn").cast("double")
-          / (col("_da") + col("_db") - col("cn")).cast("double")).as("jaccard"),
-        col("adamic_adar"), coalesce(col("_adj"), lit(0L)).as("adjacent"))
+    Local.run(Local.probe(und), und)(GraphLocal.linkPredict(edges.sparkSession, _)) {
+      val nbr = und.select(col("lo").as("u"), col("hi").as("v"))
+        .union(und.select(col("hi").as("u"), col("lo").as("v")))
+      val deg = nbr.groupBy("u").agg(count(lit(1)).as("_deg"))
+      val term = Canon.rk(lit(1.0) / log(col("_degw").cast("double")), 6)
+        .cast(org.apache.spark.sql.types.DecimalType(28, 6))
+      val pairs = nbr.select(col("v").as("_w"), col("u").as("a"))
+        .join(nbr.select(col("v").as("_w"), col("u").as("b")), "_w")
+        .filter(col("a") < col("b"))
+        .join(deg.select(col("u").as("_w"), col("_deg").as("_degw")), "_w")
+        .groupBy("a", "b")
+        .agg(count(lit(1)).as("cn"), sum(term).cast("double").as("adamic_adar"))
+      pairs
+        .join(deg.select(col("u").as("a"), col("_deg").as("_da")), "a")
+        .join(deg.select(col("u").as("b"), col("_deg").as("_db")), "b")
+        .join(und.select(col("lo").as("a"), col("hi").as("b"), lit(1L).as("_adj")),
+          Seq("a", "b"), "left")
+        .select(col("a"), col("b"), col("cn"),
+          (col("cn").cast("double")
+            / (col("_da") + col("_db") - col("cn")).cast("double")).as("jaccard"),
+          col("adamic_adar"), coalesce(col("_adj"), lit(0L)).as("adjacent"))
+    }._1
   }
 
   /** Per-node triangle counts of the UNDIRECTED simple graph underlying
@@ -346,42 +334,38 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
-    // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.triangles(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
-    }
-    val deg = und.select(col("lo").as("node")).union(und.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("_deg"))
-    // total orientation order: the (degree, id) STRUCT, compared
-    // lexicographically — not a packed d*2^32+id long, which collides
-    // (and loses the total order) once ids reach 2^32 or go negative,
-    // exactly the 64-bit-id regime a web-scale link graph lives in
-    val kLo = struct(col("_dlo").as("d"), col("lo").as("i"))
-    val kHi = struct(col("_dhi").as("d"), col("hi").as("i"))
-    val oriented = Checkpoints.pin(und
-      .join(deg.select(col("node").as("lo"), col("_deg").as("_dlo")), "lo")
-      .join(deg.select(col("node").as("hi"), col("_deg").as("_dhi")), "hi")
-      .select(
-        when(kLo < kHi, col("lo")).otherwise(col("hi")).as("u"),
-        when(kLo < kHi, col("hi")).otherwise(col("lo")).as("v"),
-        // the orientation key of v, for the wedge ordering below
-        greatest(kLo, kHi).as("_kv")))
-    // wedges at u: pairs of out-neighbors ordered by orientation key,
-    // closed by the (v, w) oriented cap edge
-    val e1 = oriented.select(col("u"), col("v").as("x"), col("_kv").as("_kx"))
-    val e2 = oriented.select(col("u"), col("v").as("y"), col("_kv").as("_ky"))
-    val tri = e1.join(e2, Seq("u")).filter(col("_kx") < col("_ky"))
-      .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-      .select(col("u"), col("x"), col("y"))
-    val nodes = deg.select("node")
-    val counts = tri.select(col("u").as("node"))
-      .union(tri.select(col("x").as("node")))
-      .union(tri.select(col("y").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    nodes.join(counts, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+    Local.run(Local.probe(und), und)(GraphLocal.triangles(edges.sparkSession, _)) {
+      val deg = und.select(col("lo").as("node")).union(und.select(col("hi").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("_deg"))
+      // total orientation order: the (degree, id) STRUCT, compared
+      // lexicographically — not a packed d*2^32+id long, which collides
+      // (and loses the total order) once ids reach 2^32 or go negative,
+      // exactly the 64-bit-id regime a web-scale link graph lives in
+      val kLo = struct(col("_dlo").as("d"), col("lo").as("i"))
+      val kHi = struct(col("_dhi").as("d"), col("hi").as("i"))
+      val oriented = Checkpoints.pin(und
+        .join(deg.select(col("node").as("lo"), col("_deg").as("_dlo")), "lo")
+        .join(deg.select(col("node").as("hi"), col("_deg").as("_dhi")), "hi")
+        .select(
+          when(kLo < kHi, col("lo")).otherwise(col("hi")).as("u"),
+          when(kLo < kHi, col("hi")).otherwise(col("lo")).as("v"),
+          // the orientation key of v, for the wedge ordering below
+          greatest(kLo, kHi).as("_kv")))
+      // wedges at u: pairs of out-neighbors ordered by orientation key,
+      // closed by the (v, w) oriented cap edge
+      val e1 = oriented.select(col("u"), col("v").as("x"), col("_kv").as("_kx"))
+      val e2 = oriented.select(col("u"), col("v").as("y"), col("_kv").as("_ky"))
+      val tri = e1.join(e2, Seq("u")).filter(col("_kx") < col("_ky"))
+        .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+        .select(col("u"), col("x"), col("y"))
+      val nodes = deg.select("node")
+      val counts = tri.select(col("u").as("node"))
+        .union(tri.select(col("x").as("node")))
+        .union(tri.select(col("y").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
+      nodes.join(counts, Seq("node"), "left")
+        .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+    }._1
   }
 
   /** Local clustering coefficient per node of the undirected simple
@@ -404,21 +388,17 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
-    // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.clustering(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
-    }
-    val deg = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    deg.join(trianglesPerNode(und, "lo", "hi"), "node")
-      .select(col("node"), col("deg"), col("n_tri"),
-        when(col("deg") >= 2,
-          Canon.rk(col("n_tri").cast("double") * 2.0
-            / (col("deg").cast("double") * (col("deg") - 1).cast("double")), 6))
-          .otherwise(0.0).as("local_cc"))
+    Local.run(Local.probe(und), und)(GraphLocal.clustering(edges.sparkSession, _)) {
+      val deg = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      deg.join(trianglesPerNode(und, "lo", "hi"), "node")
+        .select(col("node"), col("deg"), col("n_tri"),
+          when(col("deg") >= 2,
+            Canon.rk(col("n_tri").cast("double") * 2.0
+              / (col("deg").cast("double") * (col("deg") - 1).cast("double")), 6))
+            .otherwise(0.0).as("local_cc"))
+    }._1
   }
 
   /** Harmonic (closeness-family) centrality by bounded multi-source
@@ -447,39 +427,39 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
-    // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.harmonic(edges.sparkSession, local.get, maxHops)
-      finally Checkpoints.free(und)
-    }
-    val sym = Checkpoints.pin(
-      und.select(col("lo").as("u"), col("hi").as("v"))
-        .union(und.select(col("hi").as("u"), col("lo").as("v"))))
-    val nodes = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node"))).distinct()
-    var lab = Checkpoints.pin(nodes
-      .select(col("node").as("origin"), col("node"), lit(0L).as("dist")))
-    for (_ <- 1 to maxHops) {
-      val cand = sym.join(lab, col("u") === col("node"))
-        .select(col("origin"), col("v").as("node"),
-          (col("dist") + lit(1L)).as("dist"))
-      val next = Checkpoints.pin(
-        lab.select("origin", "node", "dist").union(cand)
-          .groupBy("origin", "node").agg(min(col("dist")).as("dist")))
-      Checkpoints.free(lab)
-      lab = next
-    }
-    val contrib = Canon.rk(lit(1.0) / col("dist").cast("double"), 6)
-      .cast(DecimalType(28, 6))
-    val agg = lab.filter(col("origin") =!= col("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_reached"),
-        Canon.r4(sum(contrib).cast("double")).as("harmonic"))
-    // a node that reaches nobody inside the budget has only its self
-    // label and would drop from the aggregate — keep it at zero
-    nodes.join(agg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_reached"), lit(0L)).as("n_reached"),
-        coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+    Local.run(Local.probe(und), und)(GraphLocal.harmonic(edges.sparkSession, _, maxHops)) {
+      val sym = Checkpoints.pin(
+        und.select(col("lo").as("u"), col("hi").as("v"))
+          .union(und.select(col("hi").as("u"), col("lo").as("v"))))
+      val nodes = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node"))).distinct()
+      var lab = Checkpoints.pin(nodes
+        .select(col("node").as("origin"), col("node"), lit(0L).as("dist")))
+      // the result reads the last label round and `und`, never `sym` —
+      // free it here (also on a throw) rather than strand it on the caller
+      try {
+        for (_ <- 1 to maxHops) {
+          val cand = sym.join(lab, col("u") === col("node"))
+            .select(col("origin"), col("v").as("node"),
+              (col("dist") + lit(1L)).as("dist"))
+          val next = Checkpoints.pin(
+            lab.select("origin", "node", "dist").union(cand)
+              .groupBy("origin", "node").agg(min(col("dist")).as("dist")))
+          Checkpoints.free(lab)
+          lab = next
+        }
+      } finally Checkpoints.free(sym)
+      val contrib = Canon.rk(lit(1.0) / col("dist").cast("double"), 6)
+        .cast(DecimalType(28, 6))
+      val agg = lab.filter(col("origin") =!= col("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_reached"),
+          Canon.r4(sum(contrib).cast("double")).as("harmonic"))
+      // a node that reaches nobody inside the budget has only its self
+      // label and would drop from the aggregate — keep it at zero
+      nodes.join(agg, Seq("node"), "left")
+        .select(col("node"), coalesce(col("n_reached"), lit(0L)).as("n_reached"),
+          coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+    }._1
   }
 
   /** k-core membership by `rounds` rounds of parallel peeling over the
@@ -511,64 +491,43 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
-    // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.kcore(edges.sparkSession, local.get, k, rounds)
-      finally Checkpoints.free(und)
-    }
-    val nodes = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node"))).distinct()
-    def pinKeep(m: DataFrame): DataFrame =
-      if (broadcastKeep) broadcast(m) else m.hint("shuffle_hash")
-    var sym = Checkpoints.pin(
-      und.select(col("lo").as("u"), col("hi").as("v"))
-        .union(und.select(col("hi").as("u"), col("lo").as("v"))))
-    for (_ <- 1 to rounds) {
-      // keep is PINNED before its two join references: the rename
-      // projection on the second side defeats ReuseExchange, so an
-      // unpinned keep would run the degree aggregate over the edge
-      // list twice per round — at the billion-node shuffle posture
-      // that doubles every round's dominant cost
-      val keep = Checkpoints.pin(sym.groupBy("u")
-        .agg(count(lit(1)).as("_d"))
-        .filter(col("_d") >= k).select("u"))
-      val next = Checkpoints.pin(sym
-        .join(pinKeep(keep), "u")
-        .join(pinKeep(keep.select(col("u").as("v"))), "v")
-        .select("u", "v"))
-      // every round of sym (the initial one included) is its own pin
-      // whose lineage collapsed at checkpoint time — freeing it cannot
-      // touch `und`, which `nodes` still reads (see pagerankMass)
-      Checkpoints.free(sym)
-      Checkpoints.free(keep)
-      sym = next
-    }
-    val core = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("kcore_deg"))
-    nodes.join(core, Seq("node"), "left")
-      .select(col("node"),
-        when(col("kcore_deg").isNotNull, 1L).otherwise(0L).as("in_kcore"),
-        coalesce(col("kcore_deg"), lit(0L)).as("kcore_deg"))
+    Local.run(Local.probe(und), und)(GraphLocal.kcore(edges.sparkSession, _, k, rounds)) {
+      val nodes = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node"))).distinct()
+      def pinKeep(m: DataFrame): DataFrame =
+        if (broadcastKeep) broadcast(m) else m.hint("shuffle_hash")
+      var sym = Checkpoints.pin(
+        und.select(col("lo").as("u"), col("hi").as("v"))
+          .union(und.select(col("hi").as("u"), col("lo").as("v"))))
+      for (_ <- 1 to rounds) {
+        // keep is PINNED before its two join references: the rename
+        // projection on the second side defeats ReuseExchange, so an
+        // unpinned keep would run the degree aggregate over the edge
+        // list twice per round — at the billion-node shuffle posture
+        // that doubles every round's dominant cost
+        val keep = Checkpoints.pin(sym.groupBy("u")
+          .agg(count(lit(1)).as("_d"))
+          .filter(col("_d") >= k).select("u"))
+        val next = Checkpoints.pin(sym
+          .join(pinKeep(keep), "u")
+          .join(pinKeep(keep.select(col("u").as("v"))), "v")
+          .select("u", "v"))
+        // every round of sym (the initial one included) is its own pin
+        // whose lineage collapsed at checkpoint time — freeing it cannot
+        // touch `und`, which `nodes` still reads (see pagerankMass)
+        Checkpoints.free(sym)
+        Checkpoints.free(keep)
+        sym = next
+      }
+      val core = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("kcore_deg"))
+      nodes.join(core, Seq("node"), "left")
+        .select(col("node"),
+          when(col("kcore_deg").isNotNull, 1L).otherwise(0L).as("in_kcore"),
+          coalesce(col("kcore_deg"), lit(0L)).as("kcore_deg"))
+    }._1
   }
 
-  /** Synchronous WEIGHTED label propagation (community detection), the
-    * Raghavan et al. 2007 LPA with edge-weight votes and a
-    * deterministic tie rule: labels start as node ids; each round
-    * every node adopts the label with the largest incident-weight sum
-    * among its neighbors (ties → smallest label — LPA's random
-    * tie-break would never hash-gate). Weights make round 1
-    * non-degenerate under identity init (unweighted votes all tie at
-    * the neighbor multiplicity and collapse to min-neighbor).
-    *
-    * Scale shape: the directed edge list folds to a pinned symmetric
-    * (u, v, w) table once (one shuffle ∝ edges); each round is ONE
-    * edge-sized join against the bounded (node, lbl) frame plus a
-    * (node, lbl)-keyed vote aggregate — partial-aggregated map-side —
-    * and the per-node argmax runs through the row_number→TopKPerGroup
-    * rewrite (bounded heap, no per-node sort). Superseded label rounds
-    * are freed like the pagerank/kcore loops; total state per round is
-    * ∝ nodes, never ∝ edges. */
   /** Directed (src, dst, w) folded to the symmetric weighted adjacency
     * (u, v, w): both directions emitted, duplicate/reverse edges'
     * weights merged, self-loops dropped. One shuffle ∝ edges.
@@ -590,6 +549,23 @@ object GraphOps {
     .filter(col("u") =!= col("v"))
     .groupBy("u", "v").agg(sum(col("_w")).as("w"))
 
+  /** Synchronous WEIGHTED label propagation (community detection), the
+    * Raghavan et al. 2007 LPA with edge-weight votes and a
+    * deterministic tie rule: labels start as node ids; each round
+    * every node adopts the label with the largest incident-weight sum
+    * among its neighbors (ties → smallest label — LPA's random
+    * tie-break would never hash-gate). Weights make round 1
+    * non-degenerate under identity init (unweighted votes all tie at
+    * the neighbor multiplicity and collapse to min-neighbor).
+    *
+    * Scale shape: the directed edge list folds to a pinned symmetric
+    * (u, v, w) table once (one shuffle ∝ edges); each round is ONE
+    * edge-sized join against the bounded (node, lbl) frame plus a
+    * (node, lbl)-keyed vote aggregate — partial-aggregated map-side —
+    * and the per-node argmax runs through the row_number→TopKPerGroup
+    * rewrite (bounded heap, no per-node sort). Superseded label rounds
+    * are freed like the pagerank/kcore loops; total state per round is
+    * ∝ nodes, never ∝ edges. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, rounds: Int): DataFrame = {
     val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
@@ -614,36 +590,34 @@ object GraphOps {
     * the superseded round's checkpoint blocks). */
   def labelPropagationOnSym(sym: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // SMALL-GRAPH FAST PATH — sym is caller-pinned, so the probe is a
-    // cheap block read and the caller keeps ownership of (and frees)
-    // its pin; the returned local frame needs no free (a no-op)
-    val local = GraphLocal.collectBounded(sym)
-    if (local.isDefined)
-      return GraphLocal.lpa(sym.sparkSession, local.get, rounds)
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    var pinned: Option[DataFrame] = None
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy("node").orderBy(col("votes").desc, col("lbl").asc)
-    try {
-      for (_ <- 1 to rounds) {
-        val next = Checkpoints.pin(sym
-          .join(labels.select(col("node").as("v"), col("lbl")), "v")
-          .groupBy(col("u").as("node"), col("lbl"))
-          .agg(sum(col("w")).as("votes"))
-          .withColumn("_rn", row_number().over(wv))
-          .filter(col("_rn") <= 1)
-          .select("node", "lbl"))
-        pinned.foreach(Checkpoints.free)
-        pinned = Some(next)
-        labels = next
+    // sym is caller-pinned: the caller keeps ownership of (and frees)
+    // its pin on both branches
+    Local.run(Local.probe(sym))(GraphLocal.lpa(sym.sparkSession, _, rounds)) {
+      var labels = sym.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+      var pinned: Option[DataFrame] = None
+      val wv = org.apache.spark.sql.expressions.Window
+        .partitionBy("node").orderBy(col("votes").desc, col("lbl").asc)
+      try {
+        for (_ <- 1 to rounds) {
+          val next = Checkpoints.pin(sym
+            .join(labels.select(col("node").as("v"), col("lbl")), "v")
+            .groupBy(col("u").as("node"), col("lbl"))
+            .agg(sum(col("w")).as("votes"))
+            .withColumn("_rn", row_number().over(wv))
+            .filter(col("_rn") <= 1)
+            .select("node", "lbl"))
+          pinned.foreach(Checkpoints.free)
+          pinned = Some(next)
+          labels = next
+        }
+        labels
+      } catch {
+        case e: Throwable =>
+          pinned.foreach(Checkpoints.free)
+          throw e
       }
-      labels
-    } catch {
-      case e: Throwable =>
-        pinned.foreach(Checkpoints.free)
-        throw e
-    }
+    }._1
   }
 
   /** Newman modularity readout of a node partition over the weighted
@@ -661,16 +635,14 @@ object GraphOps {
       wCol: String, labels: DataFrame, nodeCol: String = "node",
       lblCol: String = "lbl"): DataFrame = {
     val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
-    val out =
-      try modularityOnSym(sym, labels, nodeCol, lblCol)
+    val (out, posture) =
+      try modularityPosed(sym, labels, nodeCol, lblCol)
       catch { case e: Throwable => Checkpoints.free(sym); throw e }
-    // a fast-path result is a LocalRelation that no longer references
-    // the sym pin, so the caller's free(result) would be a no-op — free
-    // the pin HERE, deterministically (r22, ADVICE r21); the distributed
-    // result keeps the pin in-plan and the documented caller free holds
-    val carriesPin = out.queryExecution.analyzed.collectFirst {
-      case _: org.apache.spark.sql.execution.LogicalRDD => () }.isDefined
-    if (!carriesPin) Checkpoints.free(sym)
+    // a driver-posture result is built from collected rows and no
+    // longer references the sym pin, so the caller's free(result) would
+    // be a no-op — free the pin HERE; the loop result keeps the pin
+    // in-plan and the documented caller free holds
+    if (posture == Local.Driver) Checkpoints.free(sym)
     out
   }
 
@@ -679,43 +651,45 @@ object GraphOps {
     * checkpointed), so a caller's `Checkpoints.free(result)` after
     * materialization releases it — no stranded blocks. */
   def modularityOnSym(sym: DataFrame, labels: DataFrame,
-      nodeCol: String = "node", lblCol: String = "lbl"): DataFrame = {
+      nodeCol: String = "node", lblCol: String = "lbl"): DataFrame =
+    modularityPosed(sym, labels, nodeCol, lblCol)._1
+
+  /** [[modularityOnSym]] plus the posture it ran on. On the driver
+    * posture the result does NOT carry the caller's sym pin. */
+  private def modularityPosed(sym: DataFrame, labels: DataFrame,
+      nodeCol: String, lblCol: String): (DataFrame, Local.Posture) = {
     val lab = labels.select(col(nodeCol).cast("long").as("_nd"),
       col(lblCol).cast("long").as("_lb"))
-    // SMALL-GRAPH FAST PATH — both probes bounded; on this path the
-    // result does NOT carry the caller's sym pin (free(result) becomes
-    // a no-op) — the few superseded blocks fall to ContextCleaner
-    val localSym = GraphLocal.collectBounded(sym)
-    if (localSym.isDefined) {
-      val localLab = GraphLocal.collectBounded(lab)
-      if (localLab.isDefined) {
-        val pairs = localLab.get.map(r => r.getLong(0) -> r.getLong(1))
-        // one-row-per-node is the label contract; a duplicated node
-        // would silently last-win in the map where the distributed
-        // inner joins double-count — fall through to the loop so both
-        // postures keep ONE semantics on such input (r22, ADVICE r21)
-        if (pairs.map(_._1).distinct.length == pairs.length)
-          return GraphLocal.modularity(sym.sparkSession, localSym.get,
-            pairs.toMap)
-      }
+    // one-row-per-node is the label contract; a duplicated node would
+    // silently last-win in the map where the distributed inner joins
+    // double-count — fall through to the loop so both postures keep ONE
+    // semantics on such input (r22, ADVICE r21)
+    val local = for {
+      symRows <- Local.probe(sym)
+      labRows <- Local.probe(lab)
+      pairs = labRows.map(r => r.getLong(0) -> r.getLong(1))
+      if pairs.map(_._1).distinct.length == pairs.length
+    } yield (symRows, pairs.toMap)
+    Local.run(local) { case (symRows, byNode) =>
+      GraphLocal.modularity(sym.sparkSession, symRows, byNode) } {
+      val tot = sym.agg(sum(col("w")).as("_W"))
+      val aC = sym.groupBy("u").agg(sum(col("w")).as("_k"))
+        .join(broadcast(lab), col("u") === col("_nd"))
+        .groupBy(col("_lb").as("community"))
+        .agg(count(lit(1)).as("n_nodes"), sum(col("_k")).as("a_deg"))
+      val eC = sym
+        .join(broadcast(lab.select(col("_nd").as("u"), col("_lb").as("_lu"))), "u")
+        .join(broadcast(lab.select(col("_nd").as("v"), col("_lb").as("_lv"))), "v")
+        .filter(col("_lu") === col("_lv"))
+        .groupBy(col("_lu").as("community")).agg(sum(col("w")).as("e_in"))
+      val wD = col("_W").cast("double")
+      aC.join(eC, Seq("community"), "left")
+        .crossJoin(broadcast(tot))
+        .select(col("community"), col("n_nodes"),
+          coalesce(col("e_in"), lit(0L)).as("e_in"), col("a_deg"),
+          Canon.rk(coalesce(col("e_in"), lit(0L)).cast("double") / wD
+            - (col("a_deg").cast("double") / wD)
+              * (col("a_deg").cast("double") / wD), 6).as("contrib"))
     }
-    val tot = sym.agg(sum(col("w")).as("_W"))
-    val aC = sym.groupBy("u").agg(sum(col("w")).as("_k"))
-      .join(broadcast(lab), col("u") === col("_nd"))
-      .groupBy(col("_lb").as("community"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("_k")).as("a_deg"))
-    val eC = sym
-      .join(broadcast(lab.select(col("_nd").as("u"), col("_lb").as("_lu"))), "u")
-      .join(broadcast(lab.select(col("_nd").as("v"), col("_lb").as("_lv"))), "v")
-      .filter(col("_lu") === col("_lv"))
-      .groupBy(col("_lu").as("community")).agg(sum(col("w")).as("e_in"))
-    val wD = col("_W").cast("double")
-    aC.join(eC, Seq("community"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("community"), col("n_nodes"),
-        coalesce(col("e_in"), lit(0L)).as("e_in"), col("a_deg"),
-        Canon.rk(coalesce(col("e_in"), lit(0L)).cast("double") / wD
-          - (col("a_deg").cast("double") / wD)
-            * (col("a_deg").cast("double") / wD), 6).as("contrib"))
   }
 }

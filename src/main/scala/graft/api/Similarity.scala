@@ -411,13 +411,22 @@ object Similarity {
     val q = df.filter(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("_qe"))
       .withColumn("_probe", explode(probesOf(col("_qe"))))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
     val sim = cos(df)(col("_qe"), col("_ce"))
-    cands.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
+    rankProbed(cands, q, simRound.map(Canon.rk(sim, _)).getOrElse(sim), k)
+      .select("qid", "cid", "sim", "rank")
+  }
+
+  /** The IVF candidate-rank core shared by [[ivfKnn]] and the ladder's
+    * truth pass: candidates (cid, _ce, _cell) equi-joined on the cell
+    * id to the broadcast query probes (qid, _qe, _probe), self-pairs
+    * dropped, ranked per query by (sim desc, cid asc), top `k` kept. */
+  private def rankProbed(cands: DataFrame, probes: DataFrame, sim: Column,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
+    cands.join(broadcast(probes), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
+      .withColumn("sim", sim)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select("qid", "cid", "sim", "rank")
   }
 
   /** Default predicted-recall target for [[routedNprobe]]. */
@@ -487,14 +496,9 @@ object Similarity {
     val q = assigned.filter(col("_vid").isin(qids: _*))
       .select(col("_vid").as("qid"), col("_v").as("_qe"))
       .withColumn("_probe", explode(probesOf(col("_qe"))))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(assigned)(col("_qe"), col("_ce"))
-    val rows = assigned
-      .select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell"))
-      .join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val rows = rankProbed(
+        assigned.select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell")),
+        q, cos(assigned)(col("_qe"), col("_ce")), k)
       .select(col("qid").cast("long"), col("cid").cast("long"),
         col("_qe"), col("_ce"))
       .collect()

@@ -68,80 +68,71 @@ object TextOps {
             .as("seg")))
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     try {
-      // SMALL-VOCAB FAST PATH (r21, the GraphLocal decide-and-deliver
-      // pattern): the trainer's loop state is the bounded (freq, seg)
-      // vocabulary table — below the budget, ONE bounded collect off
-      // the pinned frame replaces 2 jobs per round (argmax + re-pin)
-      // with a driver loop of the IDENTICAL arithmetic: overlapping
-      // freq-weighted adjacent pair counts, argmax on (n DESC, a ASC,
-      // b ASC) under unsigned-UTF-8-byte string order (what Spark's
-      // string sort is), left-to-right non-overlapping literal replace
-      // on the same ␟-transport. OperatorSemanticsSpec pins all 20
-      // merges against its own sequential reference, and the
-      // loop-posture parity test pins local ≡ loop. Set
-      // spark.graft.bpe.localVocabThreshold=0 to force the loop.
-      val localMax =
-        s.conf.get("spark.graft.bpe.localVocabThreshold", "2000000").toLong
-      var local = false
-      if (localMax > 0) {
-        val cap = (math.min(localMax, Int.MaxValue - 2L) + 1L).toInt
-        val head = segT.limit(cap).collect()
-        if (head.length < cap) {
-          local = true
-          def u8(x: String, y: String): Int = java.util.Arrays.compareUnsigned(
-            x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var words = head.map(r => (r.getLong(0), r.getString(1)))
-          var done = false
-          for (round <- 1 to rounds if !done) {
-            val pairs = collection.mutable.Map.empty[(String, String), Long]
-            words.foreach { case (freq, seg) =>
-              val syms = seg.split(SEP).filter(_.nonEmpty)
-              var i = 0
-              while (i + 1 < syms.length) {
-                val k = (syms(i), syms(i + 1))
-                pairs(k) = pairs.getOrElse(k, 0L) + freq
-                i += 1
-              }
-            }
-            if (pairs.isEmpty) done = true
-            else {
-              var bestA: String = null; var bestB: String = null; var bestN = -1L
-              pairs.foreach { case ((a, b), n) =>
-                val better = n > bestN || (n == bestN &&
-                  (u8(a, bestA) < 0 || (u8(a, bestA) == 0 && u8(b, bestB) < 0)))
-                if (better) { bestA = a; bestB = b; bestN = n }
-              }
-              merges += ((round.toLong, bestA, bestB, bestN))
-              val from = SEP + bestA + SEP + SEP + bestB + SEP
-              val to = SEP + bestA + bestB + SEP
-              words = words.map { case (f, seg) => (f, seg.replace(from, to)) }
+      // the trainer's loop state is the bounded (freq, seg) vocabulary
+      // table — on the driver posture ONE bounded collect off the pinned
+      // frame replaces 2 jobs per round (argmax + re-pin) with a driver
+      // loop of the IDENTICAL arithmetic: overlapping freq-weighted
+      // adjacent pair counts, argmax on (n DESC, a ASC, b ASC) under
+      // unsigned-UTF-8-byte string order (what Spark's string sort is),
+      // left-to-right non-overlapping literal replace on the same
+      // ␟-transport. OperatorSemanticsSpec pins all 20 merges against its
+      // own sequential reference, and the loop-posture parity test pins
+      // local ≡ loop.
+      graft.api.Local.run(graft.api.Local.probe(segT)) { head =>
+        def u8(x: String, y: String): Int = java.util.Arrays.compareUnsigned(
+          x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        var words = head.map(r => (r.getLong(0), r.getString(1)))
+        var done = false
+        for (round <- 1 to rounds if !done) {
+          val pairs = collection.mutable.Map.empty[(String, String), Long]
+          words.foreach { case (freq, seg) =>
+            val syms = seg.split(SEP).filter(_.nonEmpty)
+            var i = 0
+            while (i + 1 < syms.length) {
+              val k = (syms(i), syms(i + 1))
+              pairs(k) = pairs.getOrElse(k, 0L) + freq
+              i += 1
             }
           }
+          if (pairs.isEmpty) done = true
+          else {
+            var bestA: String = null; var bestB: String = null; var bestN = -1L
+            pairs.foreach { case ((a, b), n) =>
+              val better = n > bestN || (n == bestN &&
+                (u8(a, bestA) < 0 || (u8(a, bestA) == 0 && u8(b, bestB) < 0)))
+              if (better) { bestA = a; bestB = b; bestN = n }
+            }
+            merges += ((round.toLong, bestA, bestB, bestN))
+            val from = SEP + bestA + SEP + SEP + bestB + SEP
+            val to = SEP + bestA + bestB + SEP
+            words = words.map { case (f, seg) => (f, seg.replace(from, to)) }
+          }
         }
-      }
-      var exhausted = local
-      for (round <- 1 to rounds if !exhausted) {
-        val top = segT
-          .withColumn("_syms", filter(split(col("seg"), SEP), x => x =!= lit("")))
-          .filter(size(col("_syms")) >= 2)
-          .select(col("freq"), explode(
-            transform(sequence(lit(1), size(col("_syms")) - 1),
-              i => struct(element_at(col("_syms"), i).as("a"),
-                element_at(col("_syms"), i + 1).as("b")))).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("freq")).as("n"))
-          .orderBy(col("n").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((round.toLong, a, b, n))
-          val next = graft.api.Checkpoints.pin(segT.select(col("freq"),
-            call_function("replace", col("seg"),
-              lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP)).as("seg")))
-          graft.api.Checkpoints.free(segT)
-          segT = next
+      } {
+        var exhausted = false
+        for (round <- 1 to rounds if !exhausted) {
+          val top = segT
+            .withColumn("_syms", filter(split(col("seg"), SEP), x => x =!= lit("")))
+            .filter(size(col("_syms")) >= 2)
+            .select(col("freq"), explode(
+              transform(sequence(lit(1), size(col("_syms")) - 1),
+                i => struct(element_at(col("_syms"), i).as("a"),
+                  element_at(col("_syms"), i + 1).as("b")))).as("p"))
+            .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+            .agg(sum(col("freq")).as("n"))
+            .orderBy(col("n").desc, col("a").asc, col("b").asc)
+            .limit(1).collect()
+          if (top.isEmpty) exhausted = true
+          else {
+            val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+            merges += ((round.toLong, a, b, n))
+            val next = graft.api.Checkpoints.pin(segT.select(col("freq"),
+              call_function("replace", col("seg"),
+                lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP)).as("seg")))
+            graft.api.Checkpoints.free(segT)
+            segT = next
+          }
         }
       }
     } finally graft.api.Checkpoints.free(segT)

@@ -314,10 +314,8 @@ class ApiParitySpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     def both(f: => org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
-      val local = rows(f) // sf0.001 universes are far below the 1M gate
-      spark.conf.set("spark.graft.jaccard.localDfThreshold", "0")
-      try (local, rows(f))
-      finally spark.conf.unset("spark.graft.jaccard.localDfThreshold")
+      val local = rows(f) // sf0.001 universes are far below the 1M budget
+      (local, TestSpark.withLoopPosture(rows(f)))
     }
     val (wordL, wordW) = both(
       graft.api.Dedup.nearJaccardPairs(docs, "doc_id", "text", 0.8, Some("lang")))
@@ -435,12 +433,10 @@ class ApiParitySpec extends AnyFunSuite {
     // force the DISTRIBUTED loop (200k edges would otherwise take the
     // driver union-find fast path), then run the default local path too
     // and require bit-identical labels from both
-    val got =
-      try {
-        s.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-        graft.api.Dedup.connectedComponents(edgesDf)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally s.conf.unset("spark.graft.cc.localEdgeThreshold")
+    val got = TestSpark.withLoopPosture {
+      graft.api.Dedup.connectedComponents(edgesDf)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     val gotLocal = graft.api.Dedup.connectedComponents(edgesDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotLocal == got, "local union-find path must match the distributed loop")
@@ -476,9 +472,7 @@ class ApiParitySpec extends AnyFunSuite {
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
     // the convergence contract is a property of the DISTRIBUTED loop;
     // pin the conf so the tiny chain doesn't take the local fast path
-    try {
-      val s2 = spark
-      s2.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    TestSpark.withLoopPosture {
       val labels = graft.api.Dedup.connectedComponents(chain, maxIter = 10)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.size == 41 && labels.values.forall(_ == 0L),
@@ -490,7 +484,7 @@ class ApiParitySpec extends AnyFunSuite {
       // non-strict mode returns the partial labels instead of throwing
       val partial = graft.api.Dedup.connectedComponents(chain, maxIter = 3, strict = false)
       assert(partial.count() == 41)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    }
     // the default (local union-find) path must resolve the same chain
     val local = graft.api.Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

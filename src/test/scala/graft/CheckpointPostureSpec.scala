@@ -86,9 +86,8 @@ class CheckpointPostureSpec extends AnyFunSuite {
   }
 
   test("reliable posture: CC loop evicted after EVERY round still converges exactly") {
-    withConf(
+    TestSpark.withLoopPosture(withConf(
       "spark.graft.checkpoint.reliable" -> "true",
-      "spark.graft.cc.localEdgeThreshold" -> "0", // force the distributed loop
       "spark.graft.cc.testEvictEachRound" -> "true") {
       val labels = graft.api.Dedup.connectedComponents(chainPairs)
       val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -96,18 +95,17 @@ class CheckpointPostureSpec extends AnyFunSuite {
       assert(got.size === 60)
       (0L to 29L).foreach(i => assert(got(i) === 0L, s"node $i"))
       (100L to 129L).foreach(i => assert(got(i) === 100L, s"node $i"))
-    }
+    })
   }
 
   test("local posture: the same evicted CC loop dies mid-flight") {
-    withConf(
-      "spark.graft.cc.localEdgeThreshold" -> "0",
+    TestSpark.withLoopPosture(withConf(
       "spark.graft.cc.testEvictEachRound" -> "true") {
       intercept[Exception] {
         val labels = graft.api.Dedup.connectedComponents(chainPairs)
         labels.collect()
       }
-    }
+    })
   }
 
   test("posture flip does not change answers: near-dup pairs -> CC end to end") {

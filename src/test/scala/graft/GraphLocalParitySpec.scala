@@ -1,21 +1,24 @@
 package graft
 
-import graft.api.GraphOps
-import org.apache.spark.sql.DataFrame
+import graft.api.{Checkpoints, Dedup, GraphOps, Local}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r21 optimization: every GraphOps kernel gained a small-graph driver
-  * fast path (GraphLocal, the connectedComponents decide-and-deliver
-  * pattern). This spec is the bit-parity gate: for EACH kernel, the
-  * default path (local, below the edge budget) and the distributed
-  * loop (`spark.graft.graph.localEdgeThreshold=0`) must return the
-  * same rows, same column names, same types — the fast path may never
-  * change an answer, only skip per-round job latency. The test graph
-  * is sized to exercise the Canon 6-dp grid rounds (harmonic 1/3
-  * terms, Adamic–Adar 1/ln(d) sums) and the LPA/kcore tie rules. */
+  * fast path (GraphLocal, decided by the one [[graft.api.Local]] probe).
+  * This spec is the bit-parity gate: for EACH kernel, the default path
+  * (driver, within the row budget) and the distributed loop
+  * (`spark.graft.localRowBudget=0`) must return the same rows, same
+  * column names, same types — the fast path may never change an
+  * answer, only skip per-round job latency. Each posture must also
+  * leave no checkpoint pin behind once the caller frees the result.
+  * The test graph is sized to exercise the Canon 6-dp grid rounds
+  * (harmonic 1/3 terms, Adamic–Adar 1/ln(d) sums) and the LPA/kcore
+  * tie rules. */
 class GraphLocalParitySpec extends AnyFunSuite {
   private def spark = TestSpark.spark
-  private val key = "spark.graft.graph.localEdgeThreshold"
+  import TestSpark.withLoopPosture
 
   // deterministic pseudo-random multigraph-ish edge set with a hub,
   // parallel/reverse duplicates, and integer weights 1..13
@@ -31,17 +34,25 @@ class GraphLocalParitySpec extends AnyFunSuite {
     es.toDF("src", "dst", "w")
   }
 
-  /** Run `f` on both paths and assert identical (schema + row multiset). */
+  /** Run `f`, collect it, free it, and assert no persisted RDD the run
+    * created is left behind: the pin-release contract of both postures. */
+  private def runFreed(name: String, f: => DataFrame): (Seq[Row], StructType) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val d = f
+    val rows = d.collect().toSeq
+    Checkpoints.free(d)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"$name: pins left after free(result): $leaked")
+    (rows, d.schema)
+  }
+
+  /** Run `f` on both paths and assert identical (schema + row multiset)
+    * and no stranded pins on either. */
   private def assertParity(name: String)(f: => DataFrame): Unit = {
-    val local = f
-    assert(spark.conf.get(key, "2000000").toLong > 0,
-      "parity harness expects the default (local) posture outside withLoop")
-    val localRows = local.collect().toSeq
-    val localSchema = local.schema
-    spark.conf.set(key, "0")
-    val (loopRows, loopSchema) =
-      try { val d = f; (d.collect().toSeq, d.schema) }
-      finally spark.conf.unset(key)
+    assert(Local.budget(spark) > 0,
+      "parity harness expects the default (driver) posture outside withLoopPosture")
+    val (localRows, localSchema) = runFreed(s"$name/driver", f)
+    val (loopRows, loopSchema) = withLoopPosture(runFreed(s"$name/loop", f))
     // names + types must match; NULLABILITY may differ (a LocalRelation
     // from driver tuples is non-nullable where a join's coalesce output
     // is nullable) — nullability never changes values or downstream plans
@@ -133,11 +144,9 @@ class GraphLocalParitySpec extends AnyFunSuite {
     val eLocal = intercept[IllegalArgumentException] {
       GraphOps.pagerankMass(none, "src", "dst", iters = 3).collect()
     }
-    spark.conf.set(key, "0")
-    val eLoop =
-      try intercept[IllegalArgumentException] {
-        GraphOps.pagerankMass(none, "src", "dst", iters = 3).collect()
-      } finally spark.conf.unset(key)
+    val eLoop = withLoopPosture(intercept[IllegalArgumentException] {
+      GraphOps.pagerankMass(none, "src", "dst", iters = 3).collect()
+    })
     assert(eLocal.getMessage == eLoop.getMessage,
       s"empty-input contract diverged: local='${eLocal.getMessage}' loop='${eLoop.getMessage}'")
   }
@@ -152,23 +161,33 @@ class GraphLocalParitySpec extends AnyFunSuite {
       .toDF("node", "lbl")
     val dflt = GraphOps.modularity(edges, "src", "dst", "w", labels)
       .collect().sortBy(_.toString).toSeq
-    spark.conf.set(key, "0")
-    val loop =
-      try GraphOps.modularity(edges, "src", "dst", "w", labels)
-        .collect().sortBy(_.toString).toSeq
-      finally spark.conf.unset(key)
+    val loop = withLoopPosture(GraphOps.modularity(edges, "src", "dst", "w", labels)
+      .collect().sortBy(_.toString).toSeq)
     assert(dflt == loop,
       s"duplicate-label semantics diverged\ndefault=$dflt\nloop=$loop")
   }
 
   test("bfsDistances loop dedups duplicate sources (r20 ADVICE regression)") {
     val s = spark; import s.implicits._
-    spark.conf.set(key, "0")
-    try {
+    withLoopPosture {
       val dup = GraphOps.bfsDistances(edges, "src", "dst",
         Seq(0L, 0L, 0L).toDF("node"), maxHops = 3).collect()
       assert(dup.map(_.getLong(0)).distinct.length == dup.length,
         s"duplicate sources duplicated dist rows: ${dup.toSeq}")
-    } finally spark.conf.unset(key)
+    }
+  }
+
+  test("connectedComponents local == loop") {
+    val s = spark; import s.implicits._
+    val pairs = es.map { case (a, b, _) => (a, b) }.toDF("id1", "id2")
+    assertParity("cc")(Dedup.connectedComponents(pairs))
+  }
+
+  test("modularity of LPA communities local == loop") {
+    // labels from labelPropagation are a pinned leaf on the loop posture
+    // and a driver frame on the other; the readout's plan carries them,
+    // so one free(result) must release every pin on both
+    assertParity("modularity-lpa")(GraphOps.modularity(edges, "src", "dst", "w",
+      GraphOps.labelPropagation(edges, "src", "dst", "w", rounds = 2)))
   }
 }

@@ -17,21 +17,10 @@ class GraphSpec extends AnyFunSuite {
     es.toDF("src", "dst")
   }
 
-  /** Force the distributed loop (r21): posture-comparison tests assert
-    * properties OF THE LOOP (broadcast vs shuffle label frames), so the
-    * small-graph driver fast path must be disabled for them —
-    * GraphLocalParitySpec covers local-vs-loop equivalence separately. */
-  private def withLoopPosture[A](f: => A): A = {
-    val key = "spark.graft.graph.localEdgeThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try f finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
+  // posture-comparison tests assert properties OF THE LOOP (broadcast
+  // vs shuffle label frames), so they force it with withLoopPosture —
+  // GraphLocalParitySpec covers local-vs-loop equivalence separately
+  import TestSpark.withLoopPosture
 
   /** Driver-side replica of pagerankMass's integer recurrence. */
   private def prReference(es: Seq[(Long, Long)], iters: Int,

@@ -278,9 +278,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
     val localRows = run() // default posture: fast path
-    val key = "spark.graft.bpe.localVocabThreshold"
-    spark.conf.set(key, "0")
-    val loopRows = try run() finally spark.conf.unset(key)
+    val loopRows = TestSpark.withLoopPosture(run())
     assert(localRows == loopRows,
       s"fast path diverged from the loop:\nlocal=$localRows\nloop=$loopRows")
     assert(localRows.size == 20)

@@ -17,6 +17,19 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** Run `f` with `spark.graft.localRowBudget=0`: every kernel with a
+    * driver-side twin takes its distributed loop. The previous value is
+    * restored afterwards. */
+  def withLoopPosture[A](f: => A): A = {
+    val key = "spark.graft.localRowBudget"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** A session with graft.GraftExtensions applied, sharing the suite's
     * SparkContext (clearing the default session forces getOrCreate to
     * build a fresh SessionState that honors the builder's extensions —
